@@ -123,3 +123,90 @@ def test_scratch_dirs_are_reused_not_leaked(spark, sf_dir):
     q(spark, sf_dir).count()
     assert sorted(os.listdir(os.path.dirname(path))) == root_before
     assert len(os.listdir(path)) == len(before)
+
+
+def _group_stage_tasks(spark, group: str) -> dict[int, int]:
+    """{stage id: task count} over every job run under ``group``."""
+    st = spark.sparkContext.statusTracker()
+    stages = {}
+    for job in st.getJobIdsForGroup(group):
+        for sid in st.getJobInfo(job).stageIds:
+            info = st.getStageInfo(sid)
+            if info is not None:
+                stages[sid] = info.numTasks
+    return stages
+
+
+def test_write_partitioned_clusters_over_every_shuffle_partition(spark, tmp_path):
+    """A sub-MB frame is written by as many tasks as there are shuffle
+    partitions, not coalesced by AQE onto one task, and still lands as
+    one file per partition directory with every row intact."""
+    import pathlib
+
+    from udacity_data_engineering_spark.sources.parquet_source import write_partitioned
+
+    df = spark.range(400).select(
+        "id", (F.col("id") % 12).alias("k"), (F.col("id") * 0.5).alias("v")
+    )
+    out = str(tmp_path / "clustered")
+    group = "test_write_partitioned_tasks"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        write_partitioned(df, out, ["k"])
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    stages = _group_stage_tasks(spark, group)
+    assert stages[max(stages)] > 1, f"write stage ran on one task: {stages}"
+    dirs = sorted(pathlib.Path(out).glob("k=*"))
+    assert len(dirs) == 12
+    for d in dirs:
+        assert len(list(d.glob("*.parquet"))) == 1, d.name
+    back = spark.read.parquet(out).select("id", "k", "v")
+    assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_build_session_lists_with_one_task_per_core(spark, tmp_path):
+    """A glob over 40 files (above the 32-path serial-listing threshold)
+    lists in a Spark job; a build_session session caps that job at one
+    task per core instead of one task per file."""
+    n = spark.sparkContext.defaultParallelism  # the fixture's cpus
+    for i in range(40):
+        (tmp_path / f"part{i:02d}.json").write_text(f'{{"a": {i}}}\n')
+    group = "test_listing_tasks"
+    spark.sparkContext.setJobGroup(group, group)
+    try:
+        df = spark.read.schema("a long").json(str(tmp_path / "*.json"))
+    finally:
+        spark.sparkContext._jsc.clearJobGroup()
+    stages = _group_stage_tasks(spark, group)
+    assert stages, "40 paths should list in a Spark job"
+    assert sum(stages.values()) <= n, stages
+    assert df.count() == 40
+
+
+def test_configure_keeps_stock_listing_parallelism():
+    """configure() leaves a stock session's listing parallelism at
+    Spark's default: the cap is a build_session choice only."""
+    import subprocess
+    import sys
+    from pathlib import Path
+
+    code = (
+        "from pyspark.sql import SparkSession\n"
+        "from udacity_data_engineering_spark.session import configure\n"
+        "spark = SparkSession.builder.master('local[2]')"
+        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
+        "configure(spark)\n"
+        "print('LISTING', spark.conf.get("
+        "'spark.sql.sources.parallelPartitionDiscovery.parallelism'))\n"
+        "spark.stop()\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=180,
+        cwd=str(Path(__file__).resolve().parents[1]),
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert "LISTING 10000" in out.stdout

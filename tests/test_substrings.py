@@ -221,3 +221,40 @@ def test_incremental_winnowed_probes_sampled_state(spark):
         if r.doc_id == 1
     }
     assert inc == scratch and 1 in inc
+
+
+def test_scrub_drops_null_text_doc_like_its_oracle(spark, sf_dir):
+    """q_substring_scrub over the sf documents with one doc's text set to
+    NULL equals the registry oracle over the same rows: the null-text doc
+    has no words, so neither side emits a row for it."""
+    import duckdb
+    from pyspark.sql import functions as F
+
+    from udacity_data_engineering_spark.operators.substrings import (
+        scrub_duplicate_spans,
+    )
+    from udacity_data_engineering_spark.plans.registry import all_queries
+    from udacity_data_engineering_spark.session import table
+    from udacity_data_engineering_spark.testing import compare
+
+    null_id = 0
+    docs = table(spark, sf_dir, "documents").withColumn(
+        "text", F.when(F.col("doc_id") != null_id, F.col("text"))
+    )
+    got = scrub_duplicate_spans(docs)
+    srows = got.collect()
+    con = duckdb.connect()
+    try:
+        con.execute(
+            "CREATE TABLE documents AS SELECT * REPLACE (CASE WHEN doc_id <> "
+            f"{null_id} THEN text END AS text) "
+            f"FROM read_parquet('{sf_dir}/documents.parquet')"
+        )
+        res = con.execute(all_queries()["q_substring_scrub"].oracle)
+        ocols = [d[0] for d in res.description]
+        orows = res.fetchall()
+    finally:
+        con.close()
+    assert null_id not in {r.doc_id for r in srows}
+    problems = compare(srows, got.columns, orows, ocols)
+    assert not problems, "; ".join(problems)

@@ -505,7 +505,9 @@ def scrub_duplicate_spans(
             )
         ).alias("__cov")
     )
-    base = spread(docs).select(
+    # a null-text doc has no words and emits no row, as in the oracle
+    # (unnest of a NULL split yields nothing)
+    base = spread(docs.filter(F.col("text").isNotNull())).select(
         "doc_id", F.split(F.col("text"), " ").alias("__w")
     )
     pos = F.sequence(F.lit(1), F.size("__w"))

@@ -253,6 +253,14 @@ def build_session(
     ``shuffle_partitions`` defaults to the core count: at local scale the
     stock 200 partitions just add task-scheduling overhead; on a real
     cluster this knob (and AQE coalesce) is sized to the data instead.
+
+    File listing is capped at one task per core for the same reason: a
+    glob over more than 32 paths lists in a Spark job whose stock task
+    count is one per path (up to 10,000), so the 301 song files of the
+    Sparkify layout cost 301 tasks. Only sessions built here get the
+    cap; a session handed in by the caller (see ``configure``) or run on
+    a cluster keeps the stock per-path listing, which pays off against
+    object-store latency.
     """
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0) or os.cpu_count() or 8
     shuffle_partitions = shuffle_partitions or cpus
@@ -260,6 +268,7 @@ def build_session(
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.sources.parallelPartitionDiscovery.parallelism", str(cpus))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -67,17 +67,20 @@ def write_partitioned(
     sf0.1: 2-2.7x faster than the naive write AND one file per partition
     instead of (tasks x partitions) slivers — at 100 TB the sliver
     explosion is what kills both the write (commit of millions of files)
-    and every later read (small-files problem). ``num_tasks`` caps the
-    clustering shuffle's partition count; leave None for hash
-    distribution over spark.sql.shuffle.partitions. For skewed partition
-    keys, pass num_tasks > #partitions so AQE can split hot directories.
+    and every later read (small-files problem). ``num_tasks`` sets the
+    clustering shuffle's partition count; None hashes over
+    spark.sql.shuffle.partitions. The count is always explicit: AQE
+    leaves a fixed-count repartition alone, but merges a column-only
+    ``repartition`` of a small frame up to its 1 MB minimum partition
+    size, so a sub-MB frame with hundreds of directories would write
+    every file from ONE task — and per-file create/commit cost, not
+    bytes, sets a small write's wall. A hot directory stays on one task
+    whatever ``num_tasks`` is: hash placement never splits a key, and
+    AQE splits skew only in rebalance shuffles.
     """
     if cluster:
-        df = (
-            df.repartition(num_tasks, *partition_cols)
-            if num_tasks
-            else df.repartition(*partition_cols)
-        )
+        n = num_tasks or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        df = df.repartition(n, *partition_cols)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
 

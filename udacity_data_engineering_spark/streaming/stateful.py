@@ -161,6 +161,18 @@ def ensure_tws_runtime(spark) -> bool:
       PythonFunctions capture) so the SDK's possibly-foreign-ABI C
       extension is never loaded.
 
+    It also ships ``uds_tws_serializer_patch``, which this package's
+    TWS kernels install when a worker unpickles them. The patch replaces
+    pyspark's ``TransformWithStateInPandasSerializer`` for the whole
+    worker process, not per query: once a worker has run one of these
+    kernels, EVERY transformWithStateInPandas query it serves —
+    processors from outside this package included — reads through the
+    vectorized path (which splits a key's rows at Arrow-batch boundaries
+    where stock collects them into one chunk) and writes through the
+    coalescing one. SPARK_GRAFT_TWS_VECTORIZED=0 and
+    SPARK_GRAFT_TWS_COALESCE=0 in the worker environment turn the two
+    halves off.
+
     Returns False when even the shim has no runtime to bridge to (no
     SDK install) — callers surface that as an actionable error.
     """
