@@ -138,25 +138,31 @@ def _group_stage_tasks(spark, group: str) -> dict[int, int]:
 
 
 def test_write_partitioned_clusters_over_every_shuffle_partition(spark, tmp_path):
-    """A sub-MB frame is written by as many tasks as there are shuffle
-    partitions, not coalesced by AQE onto one task, and still lands as
-    one file per partition directory with every row intact."""
+    """A sub-MB frame is written by one task per shuffle partition, capped
+    at the core count, not coalesced by AQE onto one task, and still
+    lands as one file per partition directory with every row intact. The
+    stock 200 shuffle partitions yield one task per core, not 200."""
     import pathlib
 
     from udacity_data_engineering_spark.sources.parquet_source import write_partitioned
 
+    cores = spark.sparkContext.defaultParallelism
+    assert cores > 1
     df = spark.range(400).select(
         "id", (F.col("id") % 12).alias("k"), (F.col("id") * 0.5).alias("v")
     )
     out = str(tmp_path / "clustered")
     group = "test_write_partitioned_tasks"
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "200")
     spark.sparkContext.setJobGroup(group, group)
     try:
         write_partitioned(df, out, ["k"])
     finally:
         spark.sparkContext._jsc.clearJobGroup()
+        spark.conf.set("spark.sql.shuffle.partitions", before)
     stages = _group_stage_tasks(spark, group)
-    assert stages[max(stages)] > 1, f"write stage ran on one task: {stages}"
+    assert stages[max(stages)] == cores, f"write stage tasks: {stages}"
     dirs = sorted(pathlib.Path(out).glob("k=*"))
     assert len(dirs) == 12
     for d in dirs:
@@ -165,13 +171,27 @@ def test_write_partitioned_clusters_over_every_shuffle_partition(spark, tmp_path
     assert sorted(map(tuple, back.collect())) == sorted(map(tuple, df.collect()))
 
 
+LISTING = "spark.sql.sources.parallelPartitionDiscovery.parallelism"
+
+
 def test_build_session_lists_with_one_task_per_core(spark, tmp_path):
-    """A glob over 40 files (above the 32-path serial-listing threshold)
-    lists in a Spark job; a build_session session caps that job at one
-    task per core instead of one task per file."""
-    n = spark.sparkContext.defaultParallelism  # the fixture's cpus
-    for i in range(40):
-        (tmp_path / f"part{i:02d}.json").write_text(f'{{"a": {i}}}\n')
+    """A glob over more files than the listing cap (and over the 32-path
+    serial-listing threshold) lists in a Spark job; a build_session
+    session caps that job at one task per core instead of one per file."""
+    import os
+
+    # bound by the value the shared session holds: every build_session
+    # call (e.g. sparkify.main) re-applies its own cpus to it
+    cap = int(spark.conf.get(LISTING))
+    cores = max(
+        os.cpu_count() or 1,
+        int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0),
+        spark.sparkContext.defaultParallelism,
+    )
+    assert cap <= cores, f"listing parallelism {cap} is not capped at {cores} cores"
+    files = max(40, cap + 8)
+    for i in range(files):
+        (tmp_path / f"part{i:03d}.json").write_text(f'{{"a": {i}}}\n')
     group = "test_listing_tasks"
     spark.sparkContext.setJobGroup(group, group)
     try:
@@ -179,34 +199,14 @@ def test_build_session_lists_with_one_task_per_core(spark, tmp_path):
     finally:
         spark.sparkContext._jsc.clearJobGroup()
     stages = _group_stage_tasks(spark, group)
-    assert stages, "40 paths should list in a Spark job"
-    assert sum(stages.values()) <= n, stages
-    assert df.count() == 40
+    assert stages, f"{files} paths should list in a Spark job"
+    assert sum(stages.values()) <= cap, stages
+    assert df.count() == files
 
 
 def test_configure_keeps_stock_listing_parallelism():
-    """configure() leaves a stock session's listing parallelism at
-    Spark's default: the cap is a build_session choice only."""
-    import subprocess
-    import sys
-    from pathlib import Path
+    """configure() sets only RUNTIME_CONFS, and the listing cap is not
+    among them: a driver-owned session keeps Spark's per-path listing."""
+    from udacity_data_engineering_spark.session import RUNTIME_CONFS
 
-    code = (
-        "from pyspark.sql import SparkSession\n"
-        "from udacity_data_engineering_spark.session import configure\n"
-        "spark = SparkSession.builder.master('local[2]')"
-        ".config('spark.ui.enabled', 'false').getOrCreate()\n"
-        "configure(spark)\n"
-        "print('LISTING', spark.conf.get("
-        "'spark.sql.sources.parallelPartitionDiscovery.parallelism'))\n"
-        "spark.stop()\n"
-    )
-    out = subprocess.run(
-        [sys.executable, "-c", code],
-        capture_output=True,
-        text=True,
-        timeout=180,
-        cwd=str(Path(__file__).resolve().parents[1]),
-    )
-    assert out.returncode == 0, out.stderr[-2000:]
-    assert "LISTING 10000" in out.stdout
+    assert LISTING not in RUNTIME_CONFS

@@ -69,17 +69,23 @@ def write_partitioned(
     explosion is what kills both the write (commit of millions of files)
     and every later read (small-files problem). ``num_tasks`` sets the
     clustering shuffle's partition count; None hashes over
-    spark.sql.shuffle.partitions. The count is always explicit: AQE
-    leaves a fixed-count repartition alone, but merges a column-only
-    ``repartition`` of a small frame up to its 1 MB minimum partition
-    size, so a sub-MB frame with hundreds of directories would write
-    every file from ONE task — and per-file create/commit cost, not
-    bytes, sets a small write's wall. A hot directory stays on one task
-    whatever ``num_tasks`` is: hash placement never splits a key, and
-    AQE splits skew only in rebalance shuffles.
+    spark.sql.shuffle.partitions, capped at the core count. The count is
+    always explicit: AQE leaves a fixed-count repartition alone, but
+    merges a column-only ``repartition`` of a small frame up to its 1 MB
+    minimum partition size, so a sub-MB frame with hundreds of
+    directories would write every file from ONE task — and per-file
+    create/commit cost, not bytes, sets a small write's wall. The cap
+    keeps a stock session's 200 shuffle partitions from scheduling ~200
+    mostly-empty write tasks. A hot directory stays on one task whatever
+    ``num_tasks`` is: hash placement never splits a key, and AQE splits
+    skew only in rebalance shuffles.
     """
     if cluster:
-        n = num_tasks or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+        spark = df.sparkSession
+        n = num_tasks or min(
+            int(spark.conf.get("spark.sql.shuffle.partitions")),
+            spark.sparkContext.defaultParallelism,
+        )
         df = df.repartition(n, *partition_cols)
     df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
 
